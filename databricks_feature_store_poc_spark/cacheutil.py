@@ -1,26 +1,38 @@
-"""Session-lifetime persisted-DataFrame memo (generalization of the ANN
-index cache in llm/similarity.py, ADVICE-r5-hardened semantics).
+"""Session memo: the one table of derived objects the engine reuses.
 
-Iterative operators (PageRank's edge list, k-means' quantized vectors)
-reference the same derived DataFrame several times in one plan; without
-persistence Spark re-derives it per reference. ``session_persist``
-caches ONE persisted copy per (application, kind, source fingerprint):
+``memo(spark, kind, sources, build, persist=False)`` returns the entry for
+``(kind, abspaths of sources)`` and calls ``build()`` only on a miss. An
+entry is valid only for the Spark application that built it and for the
+current ``source_fingerprint(sources)`` (mtime_ns + size of every source
+file), so a stopped session or a source regenerated in place is a miss.
 
-- the source-file fingerprint (mtime_ns + size) invalidates the entry
-  if the underlying parquet is regenerated in place;
-- entries from stopped applications or stale fingerprints are
-  unpersisted/evicted on the next touch, so the memo can't grow beyond
-  one live entry per (kind, source) per process.
+Every entry is one of two sorts, each with one eviction rule:
+
+- **Plan entries** (``persist=False``) hold an unexecuted DataFrame, a
+  schema or driver-side values. They pin no storage and are dropped only
+  when their application is gone.
+- **Result entries** (``persist=True``): ``build()`` returns a DataFrame
+  and the memo persists it. Inserting one unpersists every other result
+  entry of the same kind, so each kind pins at most one cached copy.
+  Eviction unpersists rather than forgets: Spark's CacheManager would
+  otherwise hand the old cached data to a fresh read of a regenerated
+  source, because the two plans match.
+
+The module also holds the cached application id, the source fingerprint,
+and the localCheckpoint ledger, whose blocks have their own lifecycle
+(released after the consuming action, below).
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-_CACHE: dict[tuple, DataFrame] = {}
+# (kind, abspaths) -> (app id, source fingerprint, persisted?, value)
+_MEMO: dict[tuple, tuple[str, str, bool, Any]] = {}
 
 
 def app_id(spark: SparkSession) -> str:
@@ -124,28 +136,31 @@ def release_checkpoints(spark: SparkSession) -> int:
     return n
 
 
-def session_get(
-    spark: SparkSession, kind: str, source_paths: list[str]
-) -> DataFrame | None:
-    """Peek the memo WITHOUT building anything: lets callers whose
-    DataFrame construction is itself expensive (collect-driven fits)
-    skip the construction when a live entry already exists. Returns
-    None on miss or stale fingerprint (the next session_persist call
-    evicts stale entries)."""
-    key = (app_id(spark), kind, source_fingerprint(source_paths))
-    return _CACHE.get(key)
-
-
-def session_persist(
-    spark: SparkSession, kind: str, source_paths: list[str], df: DataFrame
-) -> DataFrame:
+def memo(
+    spark: SparkSession,
+    kind: str,
+    sources: list[str],
+    build: Callable[[], Any],
+    persist: bool = False,
+) -> Any:
+    """The memoized ``build()`` for ``(kind, sources)`` in this session;
+    see the module docstring for validity and eviction."""
     app = app_id(spark)
-    key = (app, kind, source_fingerprint(source_paths))
-    for k in [k for k in _CACHE if k != key and (k[0] != app or k[:2] == key[:2])]:
-        try:
-            _CACHE.pop(k).unpersist()
-        except Exception:
-            pass  # owning context already gone — the cache died with it
-    if key not in _CACHE:
-        _CACHE[key] = df.persist()
-    return _CACHE[key]
+    key = (kind, tuple(os.path.abspath(p) for p in sources))
+    fp = source_fingerprint(sources)
+    hit = _MEMO.get(key)
+    if hit is not None and hit[0] == app and hit[1] == fp:
+        return hit[3]
+    for k, (a, _, persisted, value) in list(_MEMO.items()):
+        if a != app or (persist and persisted and k[0] == kind):
+            del _MEMO[k]
+            if persisted:
+                try:
+                    value.unpersist()
+                except Exception:
+                    pass  # owning context already gone; storage died with it
+    value = build()
+    if persist:
+        value = value.persist()
+    _MEMO[key] = (app, fp, persist, value)
+    return value

@@ -1093,14 +1093,14 @@ def rfm_segments(
             ).cast("long").alias("m_score"),
         )
     else:
-        from databricks_feature_store_poc_spark.cacheutil import session_persist
+        from databricks_feature_store_poc_spark.cacheutil import memo
 
         # The three cut scans + the scoring pass reference cust 4x;
         # persist ONE copy for the session (fingerprint-keyed, evicted
         # on testdata regeneration) instead of re-aggregating orders.
-        cust = session_persist(
+        cust = memo(
             spark, "rfm_cust",
-            [os.path.join(sf_dir, "orders.parquet")], cust,
+            [os.path.join(sf_dir, "orders.parquet")], lambda: cust, persist=True,
         )
         r_cuts = _disc_cut_frame(
             cust.select((-F.col("recency_days")).alias("v")), "v", "r"

@@ -45,17 +45,20 @@ def _decon_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the split + shingle fan-out."""
     import os as _os
 
-    from databricks_feature_store_poc_spark.cacheutil import session_persist
+    from databricks_feature_store_poc_spark.cacheutil import memo
 
-    d = load_table(spark, sf_dir, "documents")
-    ex = d.select("doc_id", F.expr(_WORDS).alias("words")).select(
-        "doc_id", F.explode(F.expr(shingle_expr(DECON_NGRAM))).alias("shingle")
-    )
-    return session_persist(
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        return d.select("doc_id", F.expr(_WORDS).alias("words")).select(
+            "doc_id", F.explode(F.expr(shingle_expr(DECON_NGRAM))).alias("shingle")
+        )
+
+    return memo(
         spark,
         "decon_shingles",
         [_os.path.join(sf_dir, "documents.parquet")],
-        ex,
+        build,
+        persist=True,
     )
 
 

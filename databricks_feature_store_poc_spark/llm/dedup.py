@@ -28,11 +28,13 @@ with the LSH route above it (llm/similarity.py).
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from databricks_feature_store_poc_spark.cacheutil import app_id as _app_id
+from databricks_feature_store_poc_spark.cacheutil import memo
 from databricks_feature_store_poc_spark.cacheutil import (
     tracked_local_checkpoint as _ckpt,
 )
@@ -95,33 +97,27 @@ _DUCK_SHINGLES = rf"""
 """
 
 
-# Session-scoped memo for the inverted index: five dedup queries build
-# the identical (tokenize -> shingle -> DF-cap) pipeline over the same
-# corpus; reusing one persisted index across them is the same reuse-a-
-# partitioning principle as sharing a shuffle across window frames.
-# Keyed by Spark application id so a new session never sees another
-# session's (invalid) cached plan.
-_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
-# A long-lived session touching many sf_dirs would otherwise accumulate
-# persisted indexes in executor storage memory forever; two live entries
-# cover the dev loop (one sf for tests + one for bench) and anything older
-# is unpersisted on insert.
-_INDEX_CACHE_MAX = 2
-
-
 def shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingle) inverted index with stop-shingles removed.
 
     One explode + one group-filter; no driver materialization. The DF cap
     is computed with a window over the exploded index (count distinct docs
-    per shingle) — a single shuffle on shingle. Memoized per
-    (session, sf_dir): deterministic content, so reuse is invisible to
-    callers except in wall time.
+    per shingle) — a single shuffle on shingle. A session result memo:
+    five dedup queries build this identical pipeline over the same corpus
+    and fan it into several DAG branches (signatures, pair join both
+    sides, size lookup), so one persisted copy runs the tokenize + df-cap
+    shuffle once.
     """
-    cache_key = (_app_id(spark), sf_dir)
-    cached = _INDEX_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
+    return memo(
+        spark,
+        "shingle_index",
+        [os.path.join(sf_dir, "documents.parquet")],
+        lambda: _shingle_index_plan(spark, sf_dir),
+        persist=True,
+    )
+
+
+def _shingle_index_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # Materialize the words array once per row; building shingles off the
     # raw split expression would re-tokenize the text per index inside the
@@ -135,29 +131,11 @@ def shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # where the agg+self-join formulation costs two.
     from pyspark.sql.window import Window
 
-    idx = (
+    return (
         ex.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("shingle")))
         .filter(F.col("df") <= DF_CAP)
         .select("doc_id", "shingle")
     )
-    # The callers fan the index into several DAG branches (signatures,
-    # pair join both sides, size lookup) — persist so the tokenize +
-    # df-cap shuffle runs once, not per branch.
-    idx = idx.persist()
-    _INDEX_CACHE[cache_key] = idx
-    # Evict superseded entries (oldest-first; dicts preserve insertion
-    # order). Entries from dead sessions just get dropped — unpersist on a
-    # stopped SparkContext raises, and their storage died with the JVM.
-    app_id = _app_id(spark)
-    while len(_INDEX_CACHE) > _INDEX_CACHE_MAX:
-        old_key, old_df = next(iter(_INDEX_CACHE.items()))
-        del _INDEX_CACHE[old_key]
-        if old_key[0] == app_id:
-            try:
-                old_df.unpersist(blocking=False)
-            except Exception:
-                pass
-    return idx
 
 
 def _jaccard_for_pairs(idx: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -463,21 +441,19 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     time COMPILING their giant codegen unit than executing it at any
     scale where compile time matters per plan.
 
-    Session-persisted per corpus: dedup_simhash and its audit twin both
+    A session result memo: dedup_simhash and its audit twin both
     consume the identical fingerprint table.
     """
-    import os as _os
-
-    from databricks_feature_store_poc_spark.cacheutil import (
-        session_get,
-        session_persist,
+    return memo(
+        spark,
+        "simhash_fingerprints",
+        [os.path.join(sf_dir, "documents.parquet")],
+        lambda: _simhash_plan(spark, sf_dir),
+        persist=True,
     )
 
-    sources = [_os.path.join(sf_dir, "documents.parquet")]
-    cached = session_get(spark, "simhash_fingerprints", sources)
-    if cached is not None:
-        return cached
 
+def _simhash_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # 64-bit word hash = first 16 hex chars of md5(word), assembled from
     # two 32-bit conv() halves (conv of 16 chars would overflow the
@@ -523,10 +499,9 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         hi = (packed[:, 32:].sum(axis=1) >> np.uint64(32)).astype(np.int64)
         return pd.DataFrame({"lo": lo, "hi": hi})
 
-    docs = hashes.select("doc_id", fingerprint("hs").alias("f")).select(
+    return hashes.select("doc_id", fingerprint("hs").alias("f")).select(
         "doc_id", F.col("f.lo").alias("h_lo"), F.col("f.hi").alias("h_hi")
     )
-    return session_persist(spark, "simhash_fingerprints", sources, docs)
 
 
 def _sim_word_half_duck(pos: int) -> str:

@@ -2775,20 +2775,23 @@ def image_dhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Both stages are Arrow-batched mapInPandas over one documents scan:
     payloads never cross an exchange (the mm-family scale rule).
-    Session-persisted per corpus: mm_image_dhash and dedup_image_dhash
-    both consume this table."""
+    A session result memo: mm_image_dhash and dedup_image_dhash both
+    consume this table."""
     import os as _os
-    import struct
 
-    from databricks_feature_store_poc_spark.cacheutil import (
-        session_get,
-        session_persist,
+    from databricks_feature_store_poc_spark.cacheutil import memo
+
+    return memo(
+        spark,
+        "image_dhash_fingerprints",
+        [_os.path.join(sf_dir, "documents.parquet")],
+        lambda: _image_dhash_plan(spark, sf_dir),
+        persist=True,
     )
 
-    sources = [_os.path.join(sf_dir, "documents.parquet")]
-    cached = session_get(spark, "image_dhash_fingerprints", sources)
-    if cached is not None:
-        return cached
+
+def _image_dhash_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import struct
 
     def encode_batches(
         batches: Iterator[pd.DataFrame],
@@ -2848,8 +2851,7 @@ def image_dhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = load_table(spark, sf_dir, "documents")
     staged = d.select("doc_id", "text").mapInPandas(encode_batches, enc_schema)
-    fps = staged.mapInPandas(_make_dhash_decoder(), dec_schema)
-    return session_persist(spark, "image_dhash_fingerprints", sources, fps)
+    return staged.mapInPandas(_make_dhash_decoder(), dec_schema)
 
 
 def _dhash_bit(i: str) -> str:

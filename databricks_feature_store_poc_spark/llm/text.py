@@ -882,14 +882,15 @@ def text_surprisal_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = d.select(
         "doc_id", F.explode(F.expr(_WORDS)).alias("word")
     )
-    from databricks_feature_store_poc_spark.cacheutil import session_persist
+    from databricks_feature_store_poc_spark.cacheutil import memo
     import os as _os
 
-    words = session_persist(
+    words = memo(
         spark,
         "surprisal_words",
         [_os.path.join(sf_dir, "documents.parquet")],
-        words,
+        lambda: words,
+        persist=True,
     )
     vocab = words.groupBy("word").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
@@ -1195,13 +1196,14 @@ def text_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only dedupes at runtime and leaves the static plan 4-scan.
     import os as _os
 
-    from databricks_feature_store_poc_spark.cacheutil import session_persist
+    from databricks_feature_store_poc_spark.cacheutil import memo
 
-    big = session_persist(
+    big = memo(
         spark,
         "bigram_counts",
         [_os.path.join(sf_dir, "documents.parquet")],
-        big,
+        lambda: big,
+        persist=True,
     )
     # margins + total derived from the GROUPED relation (vocab^2-bounded),
     # not by re-scanning pairs three more times: sum(c_xy) by w1 is the

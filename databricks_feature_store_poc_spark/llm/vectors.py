@@ -241,16 +241,18 @@ def kmeans_fit_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     the collect-driven fit (ADVICE r6)."""
     import os as _os
 
-    from databricks_feature_store_poc_spark.cacheutil import (
-        session_get,
-        session_persist,
+    from databricks_feature_store_poc_spark.cacheutil import memo
+
+    return memo(
+        spark,
+        "kmeans_assignment",
+        [_os.path.join(sf_dir, "embeddings.parquet")],
+        lambda: _kmeans_fit_assign_plan(spark, sf_dir),
+        persist=True,
     )
 
-    sources = [_os.path.join(sf_dir, "embeddings.parquet")]
-    cached = session_get(spark, "kmeans_assignment", sources)
-    if cached is not None:
-        return cached
 
+def _kmeans_fit_assign_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL embeddings are not clusterable points: excluded here and in
     # the oracle's v CTE (the adversarial replica carries NULL vectors).
     # vec_id is the POINT IDENTITY: conflicting duplicate ids (r12 dup
@@ -276,16 +278,15 @@ def kmeans_fit_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         # degenerate corpus (r11): no clusterable points — an empty
         # assignment with the full schema; kmeans_assign's centroid
         # literal array would otherwise be untyped (analysis error)
-        empty = base.withColumn("cid", F.lit(0).cast("int")).withColumn(
+        return base.withColumn("cid", F.lit(0).cast("int")).withColumn(
             "dist", F.lit(0).cast("bigint")
         ).limit(0)
-        return session_persist(spark, "kmeans_assignment", sources, empty)
     centroids = {i + 1: [int(x) for x in r["qv"]] for i, r in enumerate(init_rows)}
     assigned = kmeans_assign(base, centroids)
     for _ in range(KM_ITERS - 1):
         centroids = kmeans_update(assigned)
         assigned = kmeans_assign(base, centroids)
-    return session_persist(spark, "kmeans_assignment", sources, assigned)
+    return assigned
 
 
 # --- SemDeDup: cluster-then-pair semantic dedup ----------------------------
@@ -719,13 +720,14 @@ def embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row broadcast shift factors — constant cost at any N."""
     import os
 
-    from databricks_feature_store_poc_spark.cacheutil import session_persist
+    from databricks_feature_store_poc_spark.cacheutil import memo
 
-    cells = session_persist(
+    cells = memo(
         spark,
         "pca_gram_cells",
         [os.path.join(sf_dir, "embeddings.parquet")],
-        embed_gram_matrix(spark, sf_dir),
+        lambda: embed_gram_matrix(spark, sf_dir),
+        persist=True,
     )
     up = cells.select(
         F.col("dim_i").alias("i"), F.col("dim_j").alias("j"), "s"

@@ -86,13 +86,14 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (guide §2.4) so each pagerank iteration moves only the |V| rank
     # side — that deployment note lives in OPTIMIZATION_r17/18.md; the
     # local default keeps the plan one Exchange smaller.
-    from databricks_feature_store_poc_spark.cacheutil import session_persist
+    from databricks_feature_store_poc_spark.cacheutil import memo
 
-    return session_persist(
+    return memo(
         spark,
         "pagerank_edges",
         [os.path.join(sf_dir, "orders.parquet"), os.path.join(sf_dir, "lineitem.parquet")],
-        edges,
+        lambda: edges,
+        persist=True,
     )
 
 

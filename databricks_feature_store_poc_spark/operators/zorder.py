@@ -39,11 +39,6 @@ def _staging_root() -> str:
     return os.environ.get("SPARK_GRAFT_STAGING_DIR", tempfile.gettempdir())
 
 
-# scan_binary_files listing memo: (applicationId, staged dir) ->
-# (staging fingerprint, loaded binaryFile DataFrame). Plan-only.
-_BINFILES_MEMO: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
-
 def _run_scoped_path(spark: SparkSession, name: str, sf_dir: str) -> str:
     """Per-(application, scale-factor) output path: concurrent runs at
     different SFs (or concurrent sessions) never race on an overwrite,
@@ -293,20 +288,15 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "doc_id long, n_bytes long, content_md5 string"
         )
-    # Plan memo (r17 optimization, guide §6 "file listing"): binaryFile's
-    # glob load re-lists ~N/10 staged files on the DRIVER every call
-    # (~1.2 s at sf0.1) for a file set that is immutable under the
-    # staging fingerprint. Memoize the loaded DataFrame — an unexecuted
-    # plan; every action still reads the files — keyed like the staging
-    # itself; manifest-backed table formats exist at scale for exactly
-    # this listing cost.
-    memo_key = (_app_id(spark), out)
-    hit = _BINFILES_MEMO.get(memo_key)
-    if hit is not None and hit[0] == fp:
-        files = hit[1]
-    else:
-        files = spark.read.format("binaryFile").load(os.path.join(out, "*.txt"))
-        _BINFILES_MEMO[memo_key] = (fp, files)
+    # Plan memo: binaryFile's glob load re-lists ~N/10 staged files on
+    # the DRIVER every call (~1.2 s at sf0.1) for a file set that is
+    # immutable while the source and the staging marker are unchanged.
+    files = cacheutil.memo(
+        spark,
+        "binfiles",
+        [os.path.join(sf_dir, "documents.parquet"), marker],
+        lambda: spark.read.format("binaryFile").load(os.path.join(out, "*.txt")),
+    )
     return files.select(
         F.regexp_extract(F.col("path"), r"([0-9]+)\.txt$", 1)
         .cast("bigint")

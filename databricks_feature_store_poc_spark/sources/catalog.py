@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from databricks_feature_store_poc_spark.cacheutil import memo
+
 TABLES = (
     "region",
     "nation",
@@ -35,38 +37,6 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Session-scoped ANALYZED-PLAN memo (r17 optimization, guide §6 "file
-# listing"): every ``load_table`` call used to run a fresh
-# ``spark.read.parquet`` — a py4j round-trip plus a driver-side
-# FileIndex build and parquet footer/schema read costing ~150 ms per
-# call on the bench rig — and the suite makes ~500 such calls per bench
-# pass (TPC-H queries alone call it 4-7x each). A real deployment reads
-# through a catalog table whose schema/file metadata is resolved once
-# per session; this memo gives the same semantics: key =
-# (applicationId, absolute path, source fingerprint). NOTHING is
-# persisted or precomputed — the value is an unexecuted logical plan,
-# so every action still scans the parquet files in full; the
-# fingerprint (mtime+size of every part file) invalidates the entry if
-# the table is regenerated in place, exactly like
-# ``cacheutil.source_fingerprint``.
-_PLAN_MEMO: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
-
-def _table_fingerprint(path: str) -> str:
-    from databricks_feature_store_poc_spark.cacheutil import source_fingerprint
-
-    return source_fingerprint([path])
-
-
-def _app_id(spark: SparkSession) -> str:
-    """Cached applicationId — see cacheutil.app_id (r18)."""
-    from databricks_feature_store_poc_spark.cacheutil import app_id
-
-    return app_id(spark)
-
-
-_CONFS_ASSERTED: set[str] = set()
-
 
 def ensure_parquet_read_confs(spark: SparkSession) -> None:
     """Assert the two parquet read confs the testdata needs, ONCE per
@@ -74,9 +44,10 @@ def ensure_parquet_read_confs(spark: SparkSession) -> None:
     py4j round-trip that used to run per load_table call / per streaming
     run). Hit and miss paths of the plan memo both route through here,
     so session conf state is identical either way (ADVICE r17 #1)."""
-    app = _app_id(spark)
-    if app in _CONFS_ASSERTED:
-        return
+    memo(spark, "parquet_read_confs", [], lambda: _set_parquet_read_confs(spark))
+
+
+def _set_parquet_read_confs(spark: SparkSession) -> None:
     for conf, val in (
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
         # TIMESTAMP(MICROS, isAdjustedToUTC=false) must read as LTZ, not
@@ -89,14 +60,6 @@ def ensure_parquet_read_confs(spark: SparkSession) -> None:
             # Static in some builds; if it is and events can't be read, the
             # error surfaces at scan time with a clear parquet-type message.
             pass
-    _CONFS_ASSERTED.add(app)
-    # One dead-session sweep per new session (ADVICE r17 #3): drop memo
-    # entries (and asserted-flag ids) from stopped applications so
-    # multi-session processes can't grow these maps without bound.
-    for memo in (_PLAN_MEMO, _SCHEMA_MEMO):
-        for k in [k for k in memo if k[0] != app]:
-            memo.pop(k, None)
-    _CONFS_ASSERTED.intersection_update({app})
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -106,17 +69,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       microsecond precision (integer division truncates, matching DuckDB).
     - ``embeddings.embedding``: already ``array<float>``; left as-is.
 
-    The analyzed plan is memoized per (session, path, file fingerprint)
-    — see ``_PLAN_MEMO`` above. DataFrames are immutable, so handing the
-    same object to every caller is safe.
+    The analyzed plan is a session plan memo (``cacheutil.memo``): a
+    fresh ``spark.read.parquet`` costs a py4j round-trip plus a driver-side
+    FileIndex build and footer read (~150 ms), and TPC-H queries alone call
+    this 4-7x each. Nothing is persisted, so every action still scans the
+    files. DataFrames are immutable, so handing the same object to every
+    caller is safe.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     ensure_parquet_read_confs(spark)
-    memo_key = (_app_id(spark), os.path.abspath(path))
-    fp = _table_fingerprint(path)
-    hit = _PLAN_MEMO.get(memo_key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
+    return memo(spark, "table", [path], lambda: _read_table(spark, path, name))
+
+
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     df = spark.read.parquet(path)
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         df = df.withColumn(
@@ -132,34 +97,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ]
     for c in ntz_cols:
         df = df.withColumn(c, F.col(c).cast(T.TimestampType()))
-    _PLAN_MEMO[memo_key] = (fp, df)
     return df
-
-
-_SCHEMA_MEMO: dict[tuple[str, str], tuple[str, T.StructType]] = {}
 
 
 def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
     """RAW parquet schema of ``path`` under the ENGINE's parquet read
     confs (nanosAsLong=true, inferTimestampNTZ=false — asserted here via
-    :func:`ensure_parquet_read_confs`, so callers no longer need their
-    own per-run conf.set round-trip; ADVICE r17 #2: the memo is only
-    valid under those confs, and this function now pins them itself),
-    memoized per (session, path, file fingerprint) — the schema-probe
-    twin of the ``load_table`` plan memo. The streaming builders call
-    ``spark.read.parquet(src).schema`` once per run just to type their
-    readStream; that probe costs a driver-side FileIndex + footer read
-    (~150 ms) each time for an answer that cannot change while the
+    :func:`ensure_parquet_read_confs`, so callers need no conf.set of
+    their own; the memo is only valid under those confs), kept as a
+    session plan memo. The streaming builders type their readStream with
+    it; an unmemoized probe costs a driver-side FileIndex + footer read
+    (~150 ms) per run for an answer that cannot change while the
     fingerprint is stable."""
     ensure_parquet_read_confs(spark)
-    memo_key = (_app_id(spark), os.path.abspath(path))
-    fp = _table_fingerprint(path)
-    hit = _SCHEMA_MEMO.get(memo_key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    schema = spark.read.parquet(path).schema
-    _SCHEMA_MEMO[memo_key] = (fp, schema)
-    return schema
+    return memo(
+        spark, "parquet_schema", [path], lambda: spark.read.parquet(path).schema
+    )
 
 
 def parquet_row_count(sf_dir: str, name: str) -> int | None:

@@ -12,8 +12,9 @@ any table scanned >= FLAG_AT times in one plan.
 Plan-time scan counts are an UPPER bound on runtime work, for two
 reasons the audit accounts for:
 
-- **Cached subtrees echo their plan.** `session_persist`ed DataFrames
-  (pagerank edges, the shingle index, ANN fits) appear as
+- **Cached subtrees echo their plan.** Result-memo DataFrames
+  (`cacheutil.memo(..., persist=True)`: pagerank edges, the shingle
+  index, ANN indexes) appear as
   InMemoryTableScan nodes whose toString echoes the cached plan's
   FileScans once per reference — pagerank "scans orders 22x" in the
   text while the runtime scans it ONCE into the cache. Rows record

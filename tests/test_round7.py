@@ -112,16 +112,6 @@ def test_ivf_quantized_oracle_and_agreement(spark):
     assert all(x["recall_ok"] and x["delta_ok"] for x in rows)
 
 
-def test_ivf_fit_memoized_across_variants(spark):
-    """Float and quantized searches must share one fit: the centers memo
-    and the persisted assignment are both reused on the second call."""
-    from databricks_feature_store_poc_spark.llm import similarity as S
-
-    a1, c1 = S._ivf_fit(spark, SF_TEST)
-    a2, c2 = S._ivf_fit(spark, SF_TEST)
-    assert a1 is a2 and c1 is c2
-
-
 def test_entity_resolution_symbolic_pairs_match_materialized(spark):
     """The symbolic entity_pairs product must equal the count the
     (deliberately avoided) row-level pair join would materialize, and
