@@ -82,12 +82,6 @@ def test_bmp_weighted_checksum_is_row_order_sensitive():
     assert sum(top_down) == sum(bottom_up)  # the unweighted sum can't see it
 
 
-@pytest.mark.parametrize("name", ["mm_decode_bmp"])
-def test_oracle_match_r14(name, spark):
-    r = compare(name, spark, SF_TEST, verbose=False)
-    assert r["ok"], f"{name}: {r.get('issues')}"
-
-
 # --- SqliteKV: real persistent online-serving backend (r14) ----------------
 
 
@@ -366,12 +360,6 @@ def test_wav_naive_fixed_offset_reader_is_wrong():
     assert payload[no_pad:no_pad + 4] != b"data"
     with_pad = off + 8 + jl + jl % 2
     assert payload[with_pad:with_pad + 4] == b"data"
-
-
-@pytest.mark.parametrize("name", ["mm_decode_wav"])
-def test_oracle_match_r14_wav(name, spark):
-    r = compare(name, spark, SF_TEST, verbose=False)
-    assert r["ok"], f"{name}: {r.get('issues')}"
 
 
 # --- text_zipf_fit / text_bigram_pmi: corpus-statistics additions ----------

@@ -180,12 +180,6 @@ def test_png_corruption_detected():
     assert got3[4] in (False, None)
 
 
-@pytest.mark.parametrize("name", ["mm_decode_png"])
-def test_oracle_match_r15_png(name, spark):
-    r = compare(name, spark, SF_TEST, verbose=False)
-    assert r["ok"], f"{name}: {r.get('issues')}"
-
-
 # --- graph_bfs_reach: checkpointed hops still give exact frontiers ---------
 
 
@@ -595,9 +589,3 @@ def test_gif_corruption_detected():
     # bad signature
     got2 = _decode_gif_foreign(b"NOTAGIF" + good[7:])
     assert got2[3] in (False, None)
-
-
-@pytest.mark.parametrize("name", ["mm_decode_gif"])
-def test_oracle_match_r15_gif(name, spark):
-    r = compare(name, spark, SF_TEST, verbose=False)
-    assert r["ok"], f"{name}: {r.get('issues')}"

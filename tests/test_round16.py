@@ -347,7 +347,7 @@ def _decode_jpeg_foreign(payload):
     )
 
     batches = iter([pd.DataFrame({"doc_id": [1], "payload": [payload]})])
-    out = next(_make_jpeg_decoder()(batches))
+    out = next(_make_jpeg_decoder("gray")(batches))
     r = out.iloc[0]
 
     def v(x):
@@ -572,11 +572,11 @@ def _jpeg_color_reference(comps, mcus_x, mcus_y):
 
 def _decode_jpeg_color_foreign(payload):
     from databricks_feature_store_poc_spark.llm.multimodal import (
-        _make_jpeg_color_decoder,
+        _make_jpeg_decoder,
     )
 
     batches = iter([pd.DataFrame({"doc_id": [1], "payload": [payload]})])
-    out = next(_make_jpeg_color_decoder()(batches))
+    out = next(_make_jpeg_decoder("color")(batches))
     r = out.iloc[0]
 
     def v(x):

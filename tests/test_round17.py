@@ -386,11 +386,11 @@ def _ref_pjpeg(coeff_blocks, bw, bh, qtable, dri=0):
 
 def _decode_pjpeg_foreign(payload):
     from databricks_feature_store_poc_spark.llm.multimodal import (
-        _make_jpeg_progressive_decoder,
+        _make_jpeg_decoder,
     )
 
     pdf = pd.DataFrame({"doc_id": [0], "payload": [payload]})
-    out = next(_make_jpeg_progressive_decoder()(iter([pdf])))
+    out = next(_make_jpeg_decoder("progressive")(iter([pdf])))
     r = out.iloc[0]
 
     def v(x):
